@@ -6,6 +6,15 @@ that also matter on a 1000-executor cluster: AQE for runtime re-planning
 parity and sane event-time semantics), Arrow for any Python exchange, and
 shuffle partitions sized to the parallelism at hand rather than the
 200-partition default.
+
+That width (``spark.sql.shuffle.partitions``) is derived, not pinned:
+unless ``extra_confs`` or the SparkConf (``spark-submit --conf``,
+``spark-defaults.conf``) sets it, it is the session's
+``sparkContext.defaultParallelism`` (N for ``local[N]``).  Batch shuffles
+are AQE-coalesced either way; stateful streams keep one versioned state
+store per shuffle partition and commit all of them every micro-batch, so
+there the width is a fixed per-batch cost.  A query restarted from a
+checkpoint keeps the width recorded in its offset log.
 """
 
 from __future__ import annotations
@@ -14,8 +23,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Tuning knobs that are correct at any scale. Cluster deployments override
-# shuffle partitions / memory via spark-submit; nothing here pins local mode.
+# Tuning knobs that are correct at any scale.  Shuffle partitions are not
+# here: get_spark derives them from the session's parallelism unless set
+# explicitly.  Cluster deployments override memory via spark-submit;
+# nothing here pins local mode.
 _BASE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -29,7 +40,6 @@ _BASE_CONFS: dict[str, str] = {
     # (see tables.load_table, which normalizes either); keep nanosAsLong so
     # the legacy nanos encoding reads as a raw long instead of erroring.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.shuffle.partitions": "32",
     "spark.ui.enabled": "false",
     # local[N] runs the whole engine in the driver JVM, whose default 1g
     # heap starves 32 executor threads (OOM on sf1-scale shuffles).  Size
@@ -39,6 +49,8 @@ _BASE_CONFS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
 }
 
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -66,6 +78,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     when no cluster master is supplied — mirrors the driver harness.
+    ``spark.sql.shuffle.partitions`` follows ``defaultParallelism`` unless
+    ``extra_confs`` or the SparkConf sets it.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -77,5 +91,12 @@ def get_spark(
         for k, v in extra_confs.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sc = spark.sparkContext
+    # extra_confs reach the SparkConf only when this call built the context
+    explicit = _SHUFFLE_PARTITIONS in (extra_confs or {}) or (
+        sc.getConf().contains(_SHUFFLE_PARTITIONS)
+    )
+    if not explicit:
+        spark.conf.set(_SHUFFLE_PARTITIONS, str(sc.defaultParallelism))
+    sc.setLogLevel("WARN")
     return spark

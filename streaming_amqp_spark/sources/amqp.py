@@ -187,9 +187,11 @@ def _rows_to_arrow_batch(rows: list[tuple]):
     positions, so an ENVELOPE_SCHEMA reorder or extension either keeps
     converting correctly or fails loudly here — never silently
     misaligns.  The pinned bit-equality corpus test
-    (tests/test_scaleout.py) remains the behavioural guard."""
+    (tests/test_scaleout.py) remains the behavioural guard.
+
+    No rows → a zero-row batch with the envelope schema."""
     pa, schema = _arrow_env()
-    cols = list(zip(*rows))
+    cols = list(zip(*rows)) or [()] * len(schema)
     arrays = []
     for i, t in enumerate(schema.types):
         if pa.types.is_string(t):

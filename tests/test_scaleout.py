@@ -281,3 +281,17 @@ def test_arrow_batch_bit_equals_stock_tuple_conversion():
     assert mine.schema.equals(stock.schema)
     for c in range(stock.num_columns):
         assert mine.column(c).equals(stock.column(c)), schema.names[c]
+
+
+def test_arrow_batch_of_no_rows_is_empty_envelope_batch():
+    """An empty row list converts to a zero-row RecordBatch carrying the
+    envelope Arrow schema (the readers still return an empty iterator
+    for an empty fetch; this pins the converter itself)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from streaming_amqp_spark.envelope import ENVELOPE_SCHEMA
+    from streaming_amqp_spark.sources.amqp import _rows_to_arrow_batch
+
+    batch = _rows_to_arrow_batch([])
+    assert batch.num_rows == 0
+    assert batch.schema.equals(to_arrow_schema(ENVELOPE_SCHEMA))

@@ -338,6 +338,78 @@ def test_temperature_window_query(amqp, tmp_path):
     }
 
 
+def test_window_state_keeps_checkpointed_width_across_restart(
+    amqp, tmp_path
+):
+    """A stateful query's shuffle width is fixed at its first start: it is
+    recorded in the offset log and restored on restart, so a session whose
+    width changed in between (get_spark sizes it to the cores) still reads
+    its state from the original partitions.  Complete mode on the memory
+    sink, the one memory-sink mode that recovers from a checkpoint."""
+    spool = _write_spool(tmp_path, _temperature_messages())
+    ckpt = str(tmp_path / "ckpt")
+    key = "spark.sql.shuffle.partitions"
+    saved = amqp.conf.get(key)
+
+    def run(width: str, name: str):
+        amqp.conf.set(key, width)
+        env = (
+            amqp.readStream.format("amqp")
+            .option("transport", "spool")
+            .option("spooldir", spool)
+            .load()
+        )
+        q = (
+            temperature_max_per_window(env, window="5 seconds")
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        widths = {
+            p["stateOperators"][0]["numShufflePartitions"]
+            for p in q.recentProgress
+        }
+        got = {
+            (r.window_start.isoformat(), r.max_temperature)
+            for r in amqp.sql(f"SELECT * FROM {name}").collect()
+        }
+        return widths, got
+
+    try:
+        widths, got = run("7", "wmax_first_start")
+        assert widths == {7}
+        assert got == {
+            ("2024-01-01T00:00:00", 21),
+            ("2024-01-01T00:00:05", 24),
+        }
+        _write_spool(
+            tmp_path,
+            [
+                # raises the restored [05, 10) window; opens [10, 15)
+                {"message_id": "r0", "body": "30",
+                 "ingest_ts": "2024-01-01T00:00:08"},
+                {"message_id": "r1", "body": "15",
+                 "ingest_ts": "2024-01-01T00:00:12"},
+            ],
+            fname="001.jsonl",
+        )
+        widths, got = run("4", "wmax_restart")
+    finally:
+        amqp.conf.set(key, saved)
+    assert widths == {7}, widths
+    assert got == {
+        ("2024-01-01T00:00:00", 21),  # state carried over untouched
+        ("2024-01-01T00:00:05", 30),
+        ("2024-01-01T00:00:10", 15),
+    }
+
+
 def test_incremental_batches_and_offsets(amqp, tmp_path):
     """Messages arriving across triggers are consumed exactly once per
     offset range (delivery-count fixture, AMQPServerStreamSuite.scala:66-96)."""

@@ -13,7 +13,8 @@ the layout in use that day happens to disagree with DuckDB.
     python tools/determinism_sweep.py --only q1_pricing_summary
     python tools/determinism_sweep.py --state /tmp/det.txt --deadline 500
 
-Exit: 0 = all green, 1 = any mismatch/error, 2 = incomplete (deadline).
+Exit: 0 = all green, 1 = any mismatch/error (or an --alt-partitions equal
+to the session's own width), 2 = incomplete (deadline).
 
 At the synthesized sf1, running the whole registry through ONE default
 16g JVM can hit the local-mode broadcast-build capacity cliff on the
@@ -33,7 +34,7 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-ALT_PARTITIONS = "7"  # vs the session default of 32
+ALT_PARTITIONS = "7"  # vs the session default: its core count
 
 
 def main() -> int:
@@ -49,7 +50,8 @@ def main() -> int:
         "small SFs; at the synthesized ~sf1 use a value ABOVE the "
         "core count, e.g. 48: 7 collapses big stages to 7 tasks on 32 "
         "cores and the sweep pays a ~4x wall-clock penalty for the "
-        "same layout-invariance signal)",
+        "same layout-invariance signal).  Must differ from the "
+        "session's own width, which follows its core count",
     )
     args = ap.parse_args()
 
@@ -71,6 +73,15 @@ def main() -> int:
     from streaming_amqp_spark.session import get_spark
 
     spark = get_spark("determinism-sweep")
+    default_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    if int(args.alt_partitions) == int(default_parts):
+        print(
+            f"REFUSED: --alt-partitions {args.alt_partitions} equals the "
+            f"session's spark.sql.shuffle.partitions ({default_parts}); "
+            "the sweep would compare a layout with itself.  Pass a "
+            "different --alt-partitions."
+        )
+        return 1
     import __spark_entry__ as e
     from tests.oracle import canon
 
@@ -92,7 +103,6 @@ def main() -> int:
 
     t_start = time.time()
     fails: list[str] = []
-    default_parts = spark.conf.get("spark.sql.shuffle.partitions")
     for name in names:
         if name in done:
             continue
