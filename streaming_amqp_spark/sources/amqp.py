@@ -34,6 +34,19 @@ AMQPFlowController.scala:271).  Scaling beyond one link = N source
 instances on N addresses unioned together, which Spark plans as N
 independent partitions.
 
+Look-ahead ingest (≡ the reference receiver storing blocks while batches
+run, with one credit window in flight): Spark calls ``read`` from
+``latestOffset``, on every trigger's critical path.  On the spool
+transport, when ``read`` returns a batch, a background worker fetches
+and decodes the next ``maxMessagesPerBatch`` window while Spark runs that
+batch; the next ``read`` waits for it, admits from it (rate limit and
+adaptive cap unchanged) and decodes any shortfall itself.  Memory bound:
+one decoded window ahead plus one ``SPOOL_READ_CHUNK`` of raw lines, on
+top of the retained (unsettled) batches.  A malformed line is counted in
+``SpoolTransport.malformed`` when it is decoded, which can be one batch
+before the rows around it are admitted.  The live ``QpidTransport`` link
+stays synchronous: its deliveries are fetched inside ``read``.
+
 The network transport (python-qpid-proton) is optional: the container has
 no AMQP stack, so ``QpidTransport`` import-gates and tests exercise the
 full source machinery through ``SpoolTransport`` (a directory of JSON-line
@@ -48,9 +61,10 @@ import json
 import os
 import time
 from collections import deque
-from datetime import datetime, timezone
+from concurrent.futures import Future, ThreadPoolExecutor
+from datetime import datetime, timedelta, timezone
 from functools import lru_cache
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
@@ -100,60 +114,33 @@ def _json_encode_body(body: Any) -> tuple[str | None, str | None, bytes | None]:
     return "amqpValue", json.dumps(body, separators=(",", ":")), None
 
 
-@lru_cache(maxsize=4096)
 def _parse_iso_ts(ts_str: str) -> datetime:
-    """ISO-8601 → naive-UTC datetime, memoized: AMQP bursts commonly carry
-    repeated (sender-batched, second-granularity) timestamps, and datetime
-    objects are immutable so sharing one instance across rows is safe."""
+    """ISO-8601 → naive-UTC datetime."""
     ingest = datetime.fromisoformat(ts_str)
     if ingest.tzinfo is not None:
         ingest = ingest.astimezone(timezone.utc).replace(tzinfo=None)
     return ingest
 
 
-def _msg_to_row(msg: dict) -> tuple:
-    """One spool/transport message dict → one envelope-schema row."""
-    body_type, body_json, body_bin = _json_encode_body(msg.get("body"))
-    if msg.get("body_b64") is not None:  # spool-file binary bodies
-        body_type, body_json = "data", None
-        body_bin = base64.b64decode(msg["body_b64"])
-    if ts_str := msg.get("ingest_ts"):
-        ingest = _parse_iso_ts(ts_str)
-    else:
-        ingest = datetime.fromtimestamp(time.time(), tz=timezone.utc).replace(
-            tzinfo=None
-        )
-    props = msg.get("application_properties") or None
-    annotations = msg.get("message_annotations") or None
-    return (
-        msg.get("message_id"),
-        msg.get("to_address"),
-        msg.get("subject"),
-        msg.get("reply_to"),
-        msg.get("correlation_id"),
-        {str(k): str(v) for k, v in props.items()} if props else None,
-        {str(k): str(v) for k, v in annotations.items()} if annotations else None,
-        body_type,
-        body_json,
-        body_bin,
-        ingest,
-    )
-
-
 # ---------------------------------------------------------------------------
-# Arrow-batched row shipping.
+# Columnar decode: message dicts → one envelope RecordBatch.
 #
 # PySpark's Python-data-source worker accepts either tuples or
 # ``pyarrow.RecordBatch``es from ``read()``.  The tuple path runs a
 # per-row, per-column converter loop (plan_data_source_read.records_to_
-# arrow_batches) that measures ~27 µs/row on the 11-column envelope —
-# 4× the cost of the JSON parse itself.  Building the RecordBatch here,
-# column-wise, keeps the JVM↔Python boundary columnar end to end and
-# was measured bit-equal to the tuple path (same pa schema, same values,
-# including bool/int→string coercion, map-entry and tz normalization).
+# arrow_batches) that costs several times the JSON parse itself.  Building
+# the columns straight from the message dicts keeps the JVM↔Python boundary
+# columnar end to end; tests/test_scaleout.py pins the result bit-equal to
+# the stock tuple converters (same arrow schema, same values, including
+# bool/int→string coercion, map-entry and tz normalization).
 
 _ARROW_ENV: tuple | None = None  # (pyarrow module, envelope arrow schema)
 ARROW_ROWS_PER_BATCH = 16384  # flush granularity; bounds per-batch memory
+_BODY_COLUMNS = ("body_type", "body", "body_binary")  # derived from body/body_b64
+_STR_OR_NONE = {str, type(None)}
+_EPOCH_NAIVE = datetime(1970, 1, 1)
+_EPOCH_UTC = _EPOCH_NAIVE.replace(tzinfo=timezone.utc)
+_ONE_US = timedelta(microseconds=1)
 
 
 def _arrow_env():
@@ -176,73 +163,160 @@ def _coerce_str(v):
     return str(v)
 
 
-def _rows_to_arrow_batch(rows: list[tuple]):
-    """Envelope row tuples (``_msg_to_row`` output) → one RecordBatch,
-    replicating the stock tuple-path converters exactly: string coercion,
-    map dict → entry list, naive timestamp interpreted via astimezone(UTC)
-    (identical to conversion.py's TimestampType converter).
+def _string_map(d) -> list | None:
+    """application_properties / message_annotations → map entries, both
+    sides str()'d (AMQPJsonFunction.scala:91-100); empty → NULL."""
+    return [(str(k), str(v)) for k, v in d.items()] if d else None
 
-    ADVICE r15: converters dispatch on the arrow schema's FIELD TYPES
-    (string / map / binary / timestamp), not hard-coded column
-    positions, so an ENVELOPE_SCHEMA reorder or extension either keeps
-    converting correctly or fails loudly here — never silently
-    misaligns.  The pinned bit-equality corpus test
-    (tests/test_scaleout.py) remains the behavioural guard.
 
-    No rows → a zero-row batch with the envelope schema."""
+def _encode_body(msg: dict) -> tuple[str | None, str | None, bytes | None]:
+    """A message's (body_type, body, body_binary): spool-file binary bodies
+    arrive as ``body_b64``, everything else through ``_json_encode_body``."""
+    if (b64 := msg.get("body_b64")) is not None:
+        return "data", None, base64.b64decode(b64)
+    body = msg.get("body")
+    if type(body) is int:  # the canonical sensor reading: json.dumps ≡ str
+        return "amqpValue", str(body), None
+    return _json_encode_body(body)
+
+
+@lru_cache(maxsize=4096)
+def _local_second_shift(second: int) -> int:
+    """Microseconds to add to a naive time in local second ``second``
+    (counted as if the naive time were UTC) to get its UTC instant."""
+    naive = _EPOCH_NAIVE + timedelta(seconds=second)
+    return (naive.astimezone(timezone.utc) - _EPOCH_UTC) // _ONE_US - second * 1_000_000
+
+
+def _utc_micros(naive: datetime) -> int:
+    """Epoch microseconds of a naive timestamp, read the way the stock
+    TimestampType converter reads it (``astimezone(UTC)``, i.e. as local
+    time).  That lookup is slow, so its shift is memoized per whole
+    second — UTC offsets only change on whole seconds."""
+    us = (naive - _EPOCH_NAIVE) // _ONE_US
+    return us + _local_second_shift(us // 1_000_000)
+
+
+def _msgs_to_arrow(msgs: list[dict]):
+    """Message dicts → one envelope RecordBatch (no rows → a zero-row
+    batch with the envelope schema).
+
+    Columns dispatch on the arrow schema's FIELD TYPES (string / map /
+    timestamp), with only the body columns derived by name, so an
+    ENVELOPE_SCHEMA reorder or extension either keeps converting correctly
+    or fails loudly here — never silently misaligns.  A message without
+    ``ingest_ts`` is stamped with the decode time."""
     pa, schema = _arrow_env()
-    cols = list(zip(*rows)) or [()] * len(schema)
+    bodies = [_encode_body(m) for m in msgs]
+    derived = dict(zip(_BODY_COLUMNS, zip(*bodies))) if bodies else {}
+    now = None
     arrays = []
-    for i, t in enumerate(schema.types):
-        if pa.types.is_string(t):
-            arrays.append(pa.array([_coerce_str(v) for v in cols[i]], t))
+    for name, t in zip(schema.names, schema.types):
+        if name in _BODY_COLUMNS:
+            arrays.append(pa.array(derived.get(name, ()), t))
+        elif pa.types.is_string(t):
+            vals = [m.get(name) for m in msgs]
+            if not set(map(type, vals)) <= _STR_OR_NONE:
+                vals = [_coerce_str(v) for v in vals]
+            arrays.append(pa.array(vals, t))
         elif pa.types.is_map(t):
-            arrays.append(
-                pa.array(
-                    [
-                        list(v.items()) if v is not None else None
-                        for v in cols[i]
-                    ],
-                    t,
-                )
-            )
-        elif pa.types.is_binary(t):
-            arrays.append(
-                pa.array(
-                    [None if v is None else bytes(v) for v in cols[i]], t
-                )
-            )
+            arrays.append(pa.array([_string_map(m.get(name)) for m in msgs], t))
         elif pa.types.is_timestamp(t):
-            arrays.append(
-                pa.array(
-                    [
-                        None if v is None else v.astimezone(timezone.utc)
-                        for v in cols[i]
-                    ],
-                    t,
-                )
-            )
+            micros = []
+            for m in msgs:
+                if ts := m.get(name):
+                    micros.append(_utc_micros(_parse_iso_ts(ts)))
+                else:
+                    if now is None:
+                        now = _utc_micros(
+                            datetime.now(timezone.utc).replace(tzinfo=None)
+                        )
+                    micros.append(now)
+            arrays.append(pa.array(micros, t))
         else:  # loud failure beats silent misconversion
             raise TypeError(
-                f"unsupported envelope arrow type {t} for column "
-                f"{schema.names[i]}"
+                f"unsupported envelope arrow type {t} for column {name}"
             )
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _parse_spool_line(line: str) -> dict | None:
-    """One spool-file line → message dict, or None for a malformed /
-    non-object line (SURVEY §7.4.2 drop-don't-crash semantics — shared by
-    the streaming SpoolTransport and the batch reader so the two paths
-    can never diverge)."""
-    line = line.strip()
-    if not line:
-        return None
+def _arrow_batches(msgs: Iterable[dict]) -> Iterator:
+    """Stream messages as RecordBatches of at most ARROW_ROWS_PER_BATCH rows."""
+    buf: list[dict] = []
+    for m in msgs:
+        buf.append(m)
+        if len(buf) >= ARROW_ROWS_PER_BATCH:
+            yield _msgs_to_arrow(buf)
+            buf = []
+    if buf:
+        yield _msgs_to_arrow(buf)
+
+
+# ---------------------------------------------------------------------------
+# Spool files: JSON lines, read as bytes.  Every reader (streaming fetch,
+# restart replay, scale-out ranges, batch files) frames lines on b"\n" and
+# decodes them through ``_parse_spool_line``, so a byte sequence can never
+# mean one message on one path and another (or an error) on the next.
+
+SPOOL_READ_CHUNK = 1 << 20  # bytes per read; bounds the raw-line buffer
+
+
+_SCAN_JSON = json.JSONDecoder().scan_once  # json.loads minus its wrappers
+
+
+def _parse_spool_line(raw: bytes) -> dict | None:
+    """One raw spool line → message dict, or None for a malformed /
+    non-object line (SURVEY §7.4.2 drop-don't-crash semantics).  Invalid
+    UTF-8 decodes as U+FFFD rather than failing the line."""
+    line = raw.decode("utf-8", errors="replace").strip()
     try:
-        msg = json.loads(line)
-    except ValueError:
+        msg, end = _SCAN_JSON(line, 0)
+    except (StopIteration, ValueError):  # no value / bad JSON
         return None
-    return msg if isinstance(msg, dict) else None
+    return msg if end == len(line) and isinstance(msg, dict) else None
+
+
+def _spool_chunks(
+    path: str, lo: int = 0, hi: int | None = None, tail: bool = False
+) -> Iterator[tuple[list[bytes], int]]:
+    """Read ``path``'s bytes [lo, hi) in bounded chunks, yielding (its
+    non-blank newline-terminated lines, byte offset just past them) per
+    chunk.  An unterminated last line stays unread — a writer may be
+    mid-append — unless ``tail`` (a finished file) asks for it."""
+    if hi is None:
+        hi = os.path.getsize(path)
+    if lo >= hi:
+        return
+    with open(path, "rb") as f:
+        f.seek(lo)
+        pos, carry = lo, b""
+        while pos < hi:
+            data = f.read(min(SPOOL_READ_CHUNK, hi - pos))
+            if not data:
+                break
+            pos += len(data)
+            data = carry + data
+            end = data.rfind(b"\n") + 1
+            carry = data[end:]
+            if end:
+                lines = [ln for ln in data[:end].splitlines() if ln.strip()]
+                yield lines, pos - len(carry)
+        if tail and carry.strip():
+            yield [ln for ln in carry.splitlines() if ln.strip()], pos
+
+
+def _spool_messages(
+    path: str, lo: int = 0, hi: int | None = None, tail: bool = False
+) -> Iterator[dict]:
+    """The well-formed messages of ``path``'s bytes [lo, hi), in order."""
+    for lines, _ in _spool_chunks(path, lo, hi, tail):
+        for raw in lines:
+            if (msg := _parse_spool_line(raw)) is not None:
+                yield msg
+
+
+def _spool_files(spool_dir: str) -> list[str]:
+    return sorted(f for f in os.listdir(spool_dir) if f.endswith(".jsonl"))
 
 
 def _retry_on_disconnect(op, reconnect):
@@ -294,11 +368,14 @@ class SpoolTransport(Transport):
 
     ``fetch`` tail-reads incrementally: a per-file byte high-water mark
     means each appended line is read and parsed exactly once over the
-    stream's lifetime — O(new data) per micro-batch, not O(total spool)
-    (the previous full-rescan was quadratic over a long-running stream).
-    Files must be appended in non-decreasing filename order (a new file
-    sorting before an already-consumed one would be read late — same
-    contract a broker's FIFO link gives the reference's receiver).
+    stream's lifetime — O(new data) per micro-batch, not O(total spool).
+    Bytes are read in ``SPOOL_READ_CHUNK`` chunks only when the raw-line
+    buffer runs short, and a line is parsed only when it is handed out (or
+    skipped), so a deep backlog costs neither a whole-spool parse up front
+    nor memory in proportion to its size.  Files must be appended in
+    non-decreasing filename order (a new file sorting before an
+    already-consumed one would be read late — same contract a broker's
+    FIFO link gives the reference's receiver).
     """
 
     def __init__(self, spool_dir: str):
@@ -309,37 +386,36 @@ class SpoolTransport(Transport):
         # (AMQPReceiver.scala:161) while the reliable path silently drops
         # (ReliableAMQPReceiver.scala:127).  The resolved semantic here:
         # drop AND count — the stream never dies, the loss is observable.
+        # Counted when the line is parsed.
         self.malformed = 0
         self._offsets: dict[str, int] = {}  # fname -> next unread byte
-        self._pending: deque[dict] = deque()
+        self._lines: deque[bytes] = deque()  # read, not yet parsed
         self._to_skip = 0  # checkpoint fast-forward debt (see skip())
 
-    def _poll(self) -> None:
-        """Read only bytes appended since the last poll.  Only complete
-        (newline-terminated) lines are consumed; a partially-flushed tail
-        stays unread — its offset un-advanced — until its newline arrives,
-        so a mid-write poll can never parse half a message."""
-        for fname in sorted(os.listdir(self.spool_dir)):
-            if not fname.endswith(".jsonl"):
-                continue
+    def _fill(self) -> bool:
+        """Buffer the next chunk of complete unread lines; False when none
+        is on disk.  A partially-flushed tail stays unread — its offset
+        un-advanced — until its newline arrives, so a mid-write read can
+        never parse half a message."""
+        for fname in _spool_files(self.spool_dir):
             path = os.path.join(self.spool_dir, fname)
-            off = self._offsets.get(fname, 0)
-            if os.path.getsize(path) <= off:
-                continue
-            with open(path, "rb") as f:
-                f.seek(off)
-                data = f.read()
-            end = data.rfind(b"\n") + 1
-            if end == 0:
-                continue
-            self._offsets[fname] = off + end
-            for raw in data[:end].splitlines():
-                line = raw.decode("utf-8", errors="replace")
-                if line.strip():
-                    if (msg := _parse_spool_line(line)) is not None:
-                        self._pending.append(msg)
-                    else:
-                        self.malformed += 1
+            for lines, end in _spool_chunks(path, self._offsets.get(fname, 0)):
+                self._offsets[fname] = end
+                if lines:
+                    self._lines.extend(lines)
+                    return True
+        return False
+
+    def _take(self, n: int) -> list[dict]:
+        """Parse buffered lines into up to ``n`` messages."""
+        out: list[dict] = []
+        while len(out) < n and (self._lines or self._fill()):
+            k = min(n - len(out), len(self._lines))
+            parsed = [_parse_spool_line(self._lines.popleft()) for _ in range(k)]
+            msgs = [m for m in parsed if m is not None]
+            self.malformed += k - len(msgs)
+            out += msgs
+        return out
 
     def skip(self, n: int) -> None:
         """Checkpoint-recovery fast-forward: drop the next ``n`` messages
@@ -349,33 +425,30 @@ class SpoolTransport(Transport):
         self.consumed += n
 
     def fetch(self, max_n: int) -> list[dict]:
-        self._poll()
-        while self._to_skip and self._pending:
-            self._pending.popleft()
-            self._to_skip -= 1
-        if self._to_skip:
-            return []
-        n = min(max_n, len(self._pending))
-        batch = [self._pending.popleft() for _ in range(n)]
-        self.consumed += n
+        while self._to_skip:
+            dropped = len(self._take(min(self._to_skip, ARROW_ROWS_PER_BATCH)))
+            if not dropped:
+                return []
+            self._to_skip -= dropped
+        batch = self._take(max_n)
+        self.consumed += len(batch)
         return batch
 
     def replay(self, start: int, end: int) -> list[dict]:
         """Full-rescan slow path for offset-range replay after a restart
-        (≡ WAL block re-read); leaves the incremental cursor and the
-        malformed counter untouched."""
+        (≡ WAL block re-read): messages ``start .. end-1`` of the spool's
+        complete lines, read through the same line decode as ``fetch``;
+        leaves the incremental cursor and the malformed counter untouched."""
         out: list[dict] = []
-        for fname in sorted(os.listdir(self.spool_dir)):
-            if not fname.endswith(".jsonl"):
-                continue
-            with open(os.path.join(self.spool_dir, fname)) as f:
-                for line in f:
-                    if line.strip():
-                        if (msg := _parse_spool_line(line)) is not None:
-                            out.append(msg)
-                            if len(out) >= end:
-                                return out[start:end]
-        return out[start:end]
+        seen = 0
+        for fname in _spool_files(self.spool_dir):
+            for msg in _spool_messages(os.path.join(self.spool_dir, fname)):
+                if seen >= end:
+                    return out
+                if seen >= start:
+                    out.append(msg)
+                seen += 1
+        return out
 
 
 class QpidTransport(Transport):
@@ -500,14 +573,28 @@ class QpidTransport(Transport):
         self._conn.close()
 
 
+def _rows(batches) -> int:
+    return sum(b.num_rows for b in batches)
+
+
 class AMQPStreamReader(SimpleDataSourceStreamReader):
     """Offset/commit protocol over a Transport.
 
-    Offset = {"seq": total messages admitted}.  Messages fetched but not
-    yet committed stay in ``_retained`` so ``readBetweenOffsets`` can
-    replay a failed batch (≡ WAL-backed block replay in the reference);
-    ``commit`` settles and drops them (≡ store-then-ack,
-    ReliableAMQPReceiver.scala:111-159).
+    Offset = {"seq": total messages admitted}.  Admitted rows that are not
+    yet committed stay in ``_retained`` (as the Arrow batches ``read``
+    returned) so ``readBetweenOffsets`` can replay a failed batch (≡
+    WAL-backed block replay in the reference); ``commit`` settles and
+    drops them (≡ store-then-ack, ReliableAMQPReceiver.scala:111-159).
+    ``admitted == settled + retained`` (row counts) holds after every
+    ``read`` and ``commit``.
+
+    Look-ahead (spool transport only): when ``read`` returns a batch, a
+    lazily created single-thread pool fetches and decodes up to one
+    ``maxMessagesPerBatch`` window ahead — the credit window the
+    reference's flow controller keeps in flight
+    (AMQPFlowController.scala:92-94) — while Spark runs that batch.  The
+    next ``read`` waits for it, admits from it, and decodes any shortfall
+    synchronously.
     """
 
     def __init__(self, options: dict):
@@ -552,26 +639,78 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
                 reliable=self.reliable,
             )
         self._seq = 0
-        self._retained: list[tuple[int, tuple]] = []  # (seq, row)
+        self.admitted = 0  # rows handed out by read()
+        self.settled = 0  # rows settled (committed, or on receive)
+        self._retained: deque[tuple[int, Any]] = deque()  # (first seq, batch)
+        # decoded, not yet admitted: at most one window (the look-ahead's)
+        self._ahead: deque = deque()
+        self._pool: ThreadPoolExecutor | None = None  # created on first use
+        self._lookahead: Future | None = None
+        self._lookahead_error: BaseException | None = None
+
+    @property
+    def retained(self) -> int:
+        """Rows admitted but not yet settled (the replay buffer)."""
+        return _rows(b for _, b in self._retained)
+
+    def __getstate__(self) -> dict:
+        # Spark pickles readers to the planner and executors: settle any
+        # in-flight look-ahead into plain state and leave the pool out.
+        self._join_lookahead()
+        return {**self.__dict__, "_pool": None}
 
     def initialOffset(self) -> dict:
         return {"seq": 0}
 
-    def _fetch_with_reconnect(self, max_n: int) -> list[dict]:
-        """transport.fetch with restart-on-disconnect (≡ the reference's
-        Receiver.restart on close/disconnect, AMQPReceiver.scala:121-151):
-        exponential backoff, then transport.reconnect() and retry.  Rows
-        already retained from earlier batches are untouched; a broker that
-        redelivers the in-flight tail yields duplicates, the same
-        at-least-once guarantee as the reference's WAL path."""
-        return _retry_on_disconnect(
+    def _decode(self, max_n: int) -> list:
+        """Fetch up to ``max_n`` messages as RecordBatches, with
+        restart-on-disconnect (≡ the reference's Receiver.restart on
+        close/disconnect, AMQPReceiver.scala:121-151): exponential backoff,
+        then transport.reconnect() and retry.  Rows already retained from
+        earlier batches are untouched; a broker that redelivers the
+        in-flight tail yields duplicates, the same at-least-once guarantee
+        as the reference's WAL path."""
+        msgs = _retry_on_disconnect(
             lambda: self.transport.fetch(max_n), self.transport.reconnect
         )
+        return list(_arrow_batches(msgs))
 
-    def _to_row(self, msg: dict) -> tuple:
-        return _msg_to_row(msg)
+    def _join_lookahead(self) -> None:
+        """Wait for the in-flight look-ahead; keep its batches, or its
+        error for the next ``read`` to raise."""
+        job, self._lookahead = self._lookahead, None
+        if job is None:
+            return
+        if (err := job.exception()) is not None:
+            self._lookahead_error = err
+        else:
+            self._ahead.extend(job.result())
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+    def _start_lookahead(self, want: int) -> None:
+        if self._pool is None:
+            self._pool = ThreadPoolExecutor(1, "amqp-lookahead")
+        self._lookahead = self._pool.submit(self._decode, want)
+
+    def _take_ahead(self, n: int) -> list:
+        """Up to ``n`` decoded rows off the front of the look-ahead window,
+        as zero-copy slices."""
+        out = []
+        while n > 0 and self._ahead:
+            b = self._ahead.popleft()
+            if b.num_rows > n:
+                self._ahead.appendleft(b.slice(n))
+                b = b.slice(0, n)
+            out.append(b)
+            n -= b.num_rows
+        return out
+
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        self._join_lookahead()
+        if (err := self._lookahead_error) is not None:
+            # a look-ahead failure (e.g. reconnects exhausted) surfaces
+            # here; the next read() retries synchronously
+            self._lookahead_error = None
+            raise err
         # Restart resync (≡ checkpoint recovery via StreamingContext.
         # getOrCreate, AMQPTemperature.scala:61): a fresh reader starts at
         # seq 0 but Spark hands us the checkpointed offset. For a replayable
@@ -579,7 +718,8 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
         # link the broker redelivers unsettled messages itself and committed
         # ones were already settled (at-least-once either way).
         if start["seq"] > self._seq and isinstance(self.transport, SpoolTransport):
-            self.transport.skip(start["seq"] - self._seq)
+            gap = start["seq"] - self._seq
+            self.transport.skip(gap - _rows(self._take_ahead(gap)))
             self._seq = start["seq"]
         now = time.monotonic()
         elapsed = (
@@ -591,47 +731,62 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
             admit = min(admit, max(1, int(self.max_rate * elapsed)))
         if self.target_batch_s:
             admit = min(admit, self._adaptive_cap)
-        msgs = self._fetch_with_reconnect(admit)
-        rows = [self._to_row(m) for m in msgs]
-        base = self._seq
-        self._retained.extend((base + i, r) for i, r in enumerate(rows))
-        self._seq = base + len(rows)
-        if not self.reliable:
-            self._retained.clear()
-        if self.target_batch_s and rows:
+        if (short := admit - _rows(self._ahead)) > 0:
+            self._ahead.extend(self._decode(short))
+        batches = self._take_ahead(admit)
+        n = _rows(batches)
+        if self.reliable:
+            seq = self._seq
+            for b in batches:
+                self._retained.append((seq, b))
+                seq += b.num_rows
+        else:
+            self.settled += n
+        self._seq += n
+        self.admitted += n
+        if self.target_batch_s and n:
             # commit(end) closes this sample into a processing duration;
             # bound the map in case an epoch is never committed (restart)
-            self._batch_done[self._seq] = (time.monotonic(), len(rows))
+            self._batch_done[self._seq] = (time.monotonic(), n)
             while len(self._batch_done) > 64:
                 self._batch_done.pop(next(iter(self._batch_done)))
-        # Ship as ONE RecordBatch (columnar boundary — the driver-side
-        # prefetch cache passes it to the JVM unconverted; the tuple
-        # path's per-row converter loop was the measured bottleneck).
-        # An empty read MUST return an empty iterator, not a 0-row batch:
-        # the engine treats any yielded element with an unchanged offset
-        # as OFFSET_DID_NOT_ADVANCE.  Rows stay retained as tuples for
-        # readBetweenOffsets replay (per-message granularity).
-        out = iter([_rows_to_arrow_batch(rows)]) if rows else iter(())
-        return out, {"seq": self._seq}
+        if (
+            n
+            and isinstance(self.transport, SpoolTransport)
+            and (want := self.max_per_batch - _rows(self._ahead)) > 0
+        ):
+            self._start_lookahead(want)
+        # RecordBatches, not tuples: the driver-side prefetch cache passes
+        # them to the JVM unconverted.  An empty read MUST return an empty
+        # iterator, not a 0-row batch: the engine treats any yielded
+        # element with an unchanged offset as OFFSET_DID_NOT_ADVANCE.
+        return iter(batches), {"seq": self._seq}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         lo, hi = start["seq"], end["seq"]
-        replay = [r for s, r in self._retained if lo <= s < hi]
-        if len(replay) == hi - lo:
+        replay = []
+        for s, b in self._retained:
+            a, z = max(lo, s), min(hi, s + b.num_rows)
+            if a < z:
+                replay.append(b.slice(a - s, z - a))
+        if _rows(replay) == hi - lo:
             return iter(replay)
         if isinstance(self.transport, SpoolTransport):  # replayable transport
-            return iter(
-                self._to_row(m) for m in self.transport.replay(lo, hi)
-            )
+            return _arrow_batches(self.transport.replay(lo, hi))
         # non-replayable transport with settled messages: at-least-once means
         # the committed prefix is gone; only the retained tail is available.
         return iter(replay)
 
     def commit(self, end: dict) -> None:
         upto = end["seq"]
-        n_settle = sum(1 for s, _ in self._retained if s < upto)
+        n_settle = 0
+        while self._retained and self._retained[0][0] < upto:
+            s, b = self._retained.popleft()
+            if (k := upto - s) < b.num_rows:
+                self._retained.appendleft((upto, b.slice(k)))
+            n_settle += min(k, b.num_rows)
         self.transport.settle(n_settle)
-        self._retained = [(s, r) for s, r in self._retained if s >= upto]
+        self.settled += n_settle
         # Adaptive admission (full A10/A11 parity: the latent controllers
         # track Spark's PID-driven blockGenerator.getCurrentLimit,
         # AMQPRateController.scala:56,214-215).  commit(end) fires after
@@ -739,11 +894,7 @@ class AMQPScaleOutStreamReader(DataSourceStreamReader):
         self._last: dict | None = None
 
     def _dir_files(self, d: str) -> list[str]:
-        return sorted(
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".jsonl")
-        )
+        return [os.path.join(d, f) for f in _spool_files(d)]
 
     def initialOffset(self) -> dict:
         return {d: {} for d in self.spool_dirs}
@@ -809,25 +960,15 @@ class AMQPScaleOutStreamReader(DataSourceStreamReader):
 
     def read(self, partition: InputPartition) -> Iterator:
         # Yields RecordBatches, not tuples: columnar all the way to the JVM
-        # (see _rows_to_arrow_batch — the tuple path's per-row converter
-        # loop dominated the measured per-batch cost).
+        # (see _msgs_to_arrow — the tuple path's per-row converter loop
+        # dominated the measured per-batch cost).
         if isinstance(partition, _EmptyPartition):
-            return
-        buf: list[tuple] = []
-        for path, lo, hi in partition.ranges:
-            with open(path, "rb") as f:
-                f.seek(lo)
-                data = f.read(hi - lo)
-            for raw in data.splitlines():
-                line = raw.decode("utf-8", errors="replace")
-                if line.strip():
-                    if (msg := _parse_spool_line(line)) is not None:
-                        buf.append(_msg_to_row(msg))
-                        if len(buf) >= ARROW_ROWS_PER_BATCH:
-                            yield _rows_to_arrow_batch(buf)
-                            buf = []
-        if buf:
-            yield _rows_to_arrow_batch(buf)
+            return iter(())
+        return _arrow_batches(
+            msg
+            for path, lo, hi in partition.ranges
+            for msg in _spool_messages(path, lo, hi)
+        )
 
     def commit(self, end: dict) -> None:
         pass
@@ -871,11 +1012,7 @@ class AMQPBatchReader(DataSourceReader):
     def partitions(self) -> list[InputPartition]:
         if self.kind == "spool":
             spool = self.options["spooldir"]
-            files = sorted(
-                os.path.join(spool, f)
-                for f in os.listdir(spool)
-                if f.endswith(".jsonl")
-            )
+            files = [os.path.join(spool, f) for f in _spool_files(spool)]
             return [_SpoolFilePartition(p) for p in files] or [_EmptyPartition()]
         addresses = self.options.get("address", "spark").split(",")
         return [_AddressPartition(a.strip()) for a in addresses]
@@ -884,20 +1021,11 @@ class AMQPBatchReader(DataSourceReader):
         if isinstance(partition, _EmptyPartition):
             return
         if isinstance(partition, _SpoolFilePartition):
-            # same drop-and-count semantics as the streaming SpoolTransport
-            # (SURVEY §7.4.2): a malformed or non-object line never fails
-            # the task.  Rows ship as RecordBatches (columnar boundary —
-            # see _rows_to_arrow_batch).
-            buf: list[tuple] = []
-            with open(partition.path) as f:
-                for line in f:
-                    if (msg := _parse_spool_line(line)) is not None:
-                        buf.append(_msg_to_row(msg))
-                        if len(buf) >= ARROW_ROWS_PER_BATCH:
-                            yield _rows_to_arrow_batch(buf)
-                            buf = []
-            if buf:
-                yield _rows_to_arrow_batch(buf)
+            # same drop-don't-crash line decode as the streaming
+            # SpoolTransport (SURVEY §7.4.2): a malformed or non-object
+            # line never fails the task.  A finished file's unterminated
+            # last line is read too.  Rows ship as RecordBatches.
+            yield from _arrow_batches(_spool_messages(partition.path, tail=True))
             return
         # live link: per-partition connection, drain until empty, settle all
         transport = QpidTransport(  # pragma: no cover - no AMQP stack in image
@@ -910,8 +1038,7 @@ class AMQPBatchReader(DataSourceReader):
         )
         try:  # pragma: no cover
             while batch := transport.fetch(CREDITS_DEFAULT):
-                for m in batch:
-                    yield _msg_to_row(m)
+                yield from _arrow_batches(batch)
                 transport.settle(len(batch))
         finally:  # pragma: no cover
             transport.close()
@@ -997,7 +1124,7 @@ class QpidSender:
 
 def _row_to_msg(row) -> dict:
     """One envelope(-ish) row → one spool/transport message dict (the
-    inverse of ``_msg_to_row``; missing columns become absent keys)."""
+    inverse of ``_msgs_to_arrow``; missing columns become absent keys)."""
     d = row.asDict() if hasattr(row, "asDict") else dict(row)
     msg: dict = {}
     for k in (

@@ -11,6 +11,7 @@ Two paths past one link's ~10k msg/s design ceiling
 
 from __future__ import annotations
 
+import base64
 import json
 
 import pytest
@@ -222,46 +223,94 @@ def test_scaleout_checkpoint_restart_no_duplicates(amqp, tmp_path):
     assert sorted(seen) == ["x-0", "x-1", "x-2", "x-3", "x-4"]
 
 
+def _msg_to_row(msg: dict) -> tuple:
+    """The tuple-path reference: one message dict → one envelope-schema
+    row, as the sources built it before they decoded columnar."""
+    from streaming_amqp_spark.sources.amqp import (
+        _json_encode_body,
+        _parse_iso_ts,
+    )
+
+    body_type, body_json, body_bin = _json_encode_body(msg.get("body"))
+    if msg.get("body_b64") is not None:  # spool-file binary bodies
+        body_type, body_json = "data", None
+        body_bin = base64.b64decode(msg["body_b64"])
+    ingest = _parse_iso_ts(msg["ingest_ts"])
+    props = msg.get("application_properties") or None
+    annotations = msg.get("message_annotations") or None
+    return (
+        msg.get("message_id"),
+        msg.get("to_address"),
+        msg.get("subject"),
+        msg.get("reply_to"),
+        msg.get("correlation_id"),
+        {str(k): str(v) for k, v in props.items()} if props else None,
+        {str(k): str(v) for k, v in annotations.items()} if annotations else None,
+        body_type,
+        body_json,
+        body_bin,
+        ingest,
+    )
+
+
 def test_arrow_batch_bit_equals_stock_tuple_conversion():
-    """The sources ship envelope rows as self-built RecordBatches
-    (``_rows_to_arrow_batch``) instead of tuples, skipping the worker's
-    per-row converter loop.  Pin bit-equality against that stock loop
-    (pyspark conversion.py converters + the same arrow schema) over a
-    corpus that exercises every coercion seam: non-string ids, bools,
-    numeric map values, nested bodies, binary b64 bodies, tz-aware and
-    absent timestamps, absent optional fields."""
+    """The sources ship envelope rows as RecordBatches built column-wise
+    from the message dicts (``_msgs_to_arrow``) instead of tuples, skipping
+    the worker's per-row converter loop.  Pin bit-equality against that
+    stock loop (pyspark conversion.py converters + the same arrow schema)
+    applied to the tuple-path rows, over a corpus that exercises every
+    coercion seam: non-string ids (int, bool, float incl. NaN/Infinity,
+    integers above 2^63), numeric and bool map values, int/bool/float/
+    nested bodies, binary b64 bodies, naive and offset timestamps, absent
+    optional fields.  The corpus goes through the spool line decode, as
+    the readers see it."""
     import pyarrow as pa
     from pyspark.sql.conversion import LocalDataToArrowConversion
 
     from streaming_amqp_spark.envelope import ENVELOPE_SCHEMA
     from streaming_amqp_spark.sources.amqp import (
         _arrow_env,
-        _msg_to_row,
-        _rows_to_arrow_batch,
+        _msgs_to_arrow,
+        _parse_spool_line,
     )
 
+    odd_ids = [7, True, 2.5, float("nan"), float("inf"), -float("inf"),
+               2**63 + 1, -(2**64)]
+    odd_bodies = [42, False, 1.25, float("nan"), float("inf"), 2**70,
+                  {"nested": [1, {"deep": None}, "x"]}, [True, 2.0], ""]
     msgs = []
-    for i in range(200):
+    for i in range(240):
         m = {
             "message_id": f"m{i}",
             "to_address": "t",
             "body": str(i % 10),
-            "ingest_ts": "2024-01-01T00:00:00",
+            "ingest_ts": f"2024-01-01T00:00:{i % 60:02d}.{i:06d}",
         }
         if i % 3 == 0:
-            m["application_properties"] = {"k": "v", "n": i, "b": True}
-            m["message_annotations"] = {"x": 1.5}
+            m["application_properties"] = {"k": "v", "n": i, "b": True,
+                                           "big": 2**64, "f": float("nan")}
+            m["message_annotations"] = {"x": 1.5, "inf": float("-inf")}
+        if i % 4 == 1:
+            m["body"] = odd_bodies[i % len(odd_bodies)]
         if i % 5 == 0:
             m["body"] = {"nested": [1, 2, i]}
         if i % 7 == 0:
             m["body_b64"] = "aGVsbG8="
         if i % 11 == 0:
-            m["message_id"] = i  # non-string id -> str() coercion
+            m["message_id"] = odd_ids[i % len(odd_ids)]
             m["subject"] = True  # bool -> "true"
+            m["correlation_id"] = 2**63 + i
             m["ingest_ts"] = "2024-06-01T05:06:07.123456+02:00"
+        if i % 17 == 0:
+            m["ingest_ts"] = "2023-12-31T23:59:59-05:30"
         if i % 13 == 0:
             m["body"] = None
+        if i % 19 == 0:
+            m["application_properties"] = {}  # empty map -> NULL
         msgs.append(m)
+    # the readers' input: spool lines through the one line decode
+    msgs = [_parse_spool_line(json.dumps(m).encode()) for m in msgs]
+    assert all(m is not None for m in msgs)
 
     rows = [_msg_to_row(m) for m in msgs]
     _, schema = _arrow_env()
@@ -277,21 +326,54 @@ def test_arrow_batch_bit_equals_stock_tuple_conversion():
             pylist[c].append(conv(r[c]))
     stock = pa.RecordBatch.from_arrays(pylist, schema=schema)
 
-    mine = _rows_to_arrow_batch(rows)
+    mine = _msgs_to_arrow(msgs)
     assert mine.schema.equals(stock.schema)
     for c in range(stock.num_columns):
         assert mine.column(c).equals(stock.column(c)), schema.names[c]
 
 
+_LOCAL_TS_CHECK = """
+from datetime import datetime, timedelta, timezone
+from streaming_amqp_spark.sources.amqp import _utc_micros
+
+epoch = datetime(1970, 1, 1, tzinfo=timezone.utc)
+us = timedelta(microseconds=1)
+t, step, shifted = datetime(2024, 1, 1), timedelta(seconds=599, microseconds=123457), 0
+while t.year == 2024:
+    stock = (t.astimezone(timezone.utc) - epoch) // us
+    assert _utc_micros(t) == stock, t
+    shifted += stock != (t - datetime(1970, 1, 1)) // us
+    t += step
+assert shifted, "the time zone did not apply"
+"""
+
+
+@pytest.mark.parametrize(
+    "tz", ["America/New_York", "Australia/Lord_Howe", "Asia/Kolkata"]
+)
+def test_naive_ingest_ts_read_as_local_time_like_stock(tz):
+    """The stock TimestampType converter reads a naive time as local time
+    (``astimezone``); the builder memoizes that shift per whole second.
+    Over a year of irregular steps, through DST gaps and overlaps (a
+    30-minute one on Lord Howe), both give the same instant."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", _LOCAL_TS_CHECK], check=True,
+                   env={**os.environ, "TZ": tz}, cwd=repo, timeout=120)
+
+
 def test_arrow_batch_of_no_rows_is_empty_envelope_batch():
-    """An empty row list converts to a zero-row RecordBatch carrying the
-    envelope Arrow schema (the readers still return an empty iterator
-    for an empty fetch; this pins the converter itself)."""
+    """No messages convert to a zero-row RecordBatch carrying the envelope
+    Arrow schema (the readers still return an empty iterator for an empty
+    fetch; this pins the builder itself)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from streaming_amqp_spark.envelope import ENVELOPE_SCHEMA
-    from streaming_amqp_spark.sources.amqp import _rows_to_arrow_batch
+    from streaming_amqp_spark.sources.amqp import _msgs_to_arrow
 
-    batch = _rows_to_arrow_batch([])
+    batch = _msgs_to_arrow([])
     assert batch.num_rows == 0
     assert batch.schema.equals(to_arrow_schema(ENVELOPE_SCHEMA))

@@ -75,14 +75,14 @@ def test_reconnect_preserves_unsettled_buffer(tmp_path):
     r = _reader(spool)
     r.transport = FlakyTransport(spool, fail_times=0)
     envelope_rows(r.read(r.initialOffset())[0])  # batch 1 retained (uncommitted)
-    assert len(r._retained) == 3
+    assert r.retained == 3
     _write_spool(tmp_path, _msgs(2, start=3), fname="001.jsonl")
     r.transport.fail_times = 1  # drop mid-stream before batch 2
     rows, off = r.read({"seq": 3})
     assert len(envelope_rows(rows)) == 2 and off == {"seq": 5}
     # batch-1 rows still replayable after the reconnect
-    assert len(r._retained) == 5
-    assert len(list(r.readBetweenOffsets({"seq": 0}, {"seq": 3}))) == 3
+    assert r.retained == 5
+    assert len(envelope_rows(r.readBetweenOffsets({"seq": 0}, {"seq": 3}))) == 3
 
 
 def test_reconnect_gives_up_after_max_attempts(tmp_path):
@@ -222,6 +222,35 @@ def test_batch_read_drops_malformed_lines(spark, tmp_path):
         .load()
     )
     assert sorted(r.message_id for r in got.collect()) == ["ok", "ok2"]
+
+
+def test_invalid_utf8_line_decodes_alike_on_every_path(spark, tmp_path):
+    """A line with an invalid UTF-8 byte decodes as U+FFFD on every spool
+    path — streaming fetch, restart replay, scale-out ranges and batch
+    read — instead of failing some of them with UnicodeDecodeError."""
+    from streaming_amqp_spark.api import read_batch
+    from streaming_amqp_spark.sources.amqp import (
+        AMQPScaleOutStreamReader,
+        _SpoolRangePartition,
+    )
+
+    register_amqp_source(spark)
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    path = spool / "000.jsonl"
+    path.write_bytes(
+        b'{"message_id": "m0", "body": "0"}\n'
+        b'{"message_id": "bad\xff", "body": "caf\xe9"}\n'
+        b'{"message_id": "m2", "body": "2"}\n'
+    )
+    want = ["m0", "bad\ufffd", "m2"]
+    assert [m["message_id"] for m in SpoolTransport(str(spool)).fetch(10)] == want
+    assert [m["message_id"] for m in SpoolTransport(str(spool)).replay(0, 3)] == want
+    part = _SpoolRangePartition([(str(path), 0, path.stat().st_size)])
+    scaled = AMQPScaleOutStreamReader({"spooldirs": str(spool)}).read(part)
+    assert [r[0] for r in envelope_rows(scaled)] == want
+    got = read_batch(spark, transport="spool", spooldir=str(spool))
+    assert [r.message_id for r in got.collect()] == want
 
 
 class RecordingSender:

@@ -848,16 +848,16 @@ def test_unreliable_mode_settles_on_receive(amqp, tmp_path):
     )
     rows, end = r.read(r.initialOffset())
     assert len(envelope_rows(rows)) == 5 and end == {"seq": 5}
-    assert r._retained == []  # settled on receive — no replay buffer
+    assert r.retained == 0  # settled on receive — no replay buffer
 
     r2 = AMQPStreamReader(
         {"transport": "spool", "spooldir": spool, "reliable": "true"}
     )
     rows2, end2 = r2.read(r2.initialOffset())
     assert len(envelope_rows(rows2)) == 5
-    assert len(r2._retained) == 5  # reliable mode retains until commit
+    assert r2.retained == 5  # reliable mode retains until commit
     r2.commit(end2)
-    assert r2._retained == []
+    assert r2.retained == 0
 
 
 def test_watermark_drops_late_data(amqp, tmp_path):
